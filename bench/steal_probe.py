@@ -44,17 +44,24 @@ def _stat() -> list[int]:
         return [int(v) for v in f.readline().split()[1:]]
 
 
-def _memcpy_gbps(mb: int = 200, reps: int = 3) -> float:
+def _memcpy_gbps(mb: int = 200, reps: int = 3) -> float | None:
     """Single-core pre-touched memcpy bandwidth (GB/s) — the SECOND
     contention axis.  A neighbor VM saturating the shared memory bus shows
     ZERO steal (no CPU is taken) while slowing every shuffle/aggregate by
     the bandwidth ratio; this box's quiet-bus reference is ~14.7 GB/s
     (BENCH/BASELINE.md substrate controls), and a round-5 episode measured
-    8.1 GB/s at 0.1 % steal alongside uniformly ~1.4x slower bench numbers."""
-    import numpy as np
+    8.1 GB/s at 0.1 % steal alongside uniformly ~1.4x slower bench numbers.
 
-    a = np.ones(mb * 1_000_000 // 8)
-    b = np.empty_like(a)
+    Returns None when numpy is missing or the two buffers cannot be
+    allocated (a memory-tight box), so the steal half of the probe still
+    reports."""
+    try:
+        import numpy as np
+
+        a = np.ones(mb * 1_000_000 // 8)
+        b = np.empty_like(a)
+    except (ImportError, MemoryError):
+        return None
     np.copyto(b, a)  # pre-touch both buffers outside the timed region
     best = None
     for _ in range(reps):
@@ -63,6 +70,14 @@ def _memcpy_gbps(mb: int = 200, reps: int = 3) -> float:
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
     return round(mb / 1000 / best, 1)
+
+
+def _advice(steal_pct: float, mem_gbps: float | None) -> str:
+    """Gate advice: noisy on high steal or a slow memory bus, unknown when
+    the bus could not be measured, else quiet."""
+    if steal_pct >= 5 or (mem_gbps is not None and mem_gbps < 11.0):
+        return "noisy"
+    return "unknown" if mem_gbps is None else "quiet"
 
 
 def main() -> None:
@@ -88,11 +103,7 @@ def main() -> None:
         "iters_per_sec_max_worker": round(max(counts) / dur),
         "memcpy_gbps": mem_gbps,
         "memcpy_gbps_quiet_ref": 14.7,
-        "gate_advice": (
-            "quiet"
-            if shares.get("steal", 0.0) < 5 and mem_gbps >= 11.0
-            else "noisy"
-        ),
+        "gate_advice": _advice(shares.get("steal", 0.0), mem_gbps),
     }
     print(json.dumps(out))
 

@@ -75,6 +75,31 @@ def probe_steal() -> dict:
         return {"steal_pct": None, "error": out.stderr[-300:]}
 
 
+_HOST_NOTE = {
+    "noisy": " — host contended (steal >= 10% or memory bus < 11 GB/s), reading "
+             "is substrate-attributed; re-run when bench/steal_probe.py says quiet",
+    "unknown": " — steal probe unavailable, host state unknown; re-run when "
+               "bench/steal_probe.py reports",
+}
+
+
+def host_state(steal: dict | None) -> str | None:
+    """Host state around a gated run from the before/after probe readings:
+    "noisy" when either reading shows steal >= 10 % or a memory bus under
+    11 GB/s, "unknown" when a reading is missing (a failed probe is never
+    taken as quiet), else "quiet".  None for --compare (no probe ran)."""
+    if not steal:
+        return None
+    readings = [steal.get(k) or {} for k in ("before", "after")]
+    for r in readings:
+        if ((r.get("steal_pct") is not None and r["steal_pct"] >= 10)
+                or (r.get("memcpy_gbps") is not None and r["memcpy_gbps"] < 11.0)):
+            return "noisy"
+    if any(r.get(k) is None for r in readings for k in ("steal_pct", "memcpy_gbps")):
+        return "unknown"
+    return "quiet"
+
+
 def main() -> int:
     if len(sys.argv) > 2 and sys.argv[1] == "--compare":
         with open(sys.argv[2]) as f:
@@ -112,16 +137,9 @@ def main() -> int:
         json.dump({"baseline": os.path.basename(base_path), "current": current,
                    "host_steal": steal,
                    "regressions": [r[0] for r in regressions]}, f, indent=1)
-    noisy = steal and any(
-        ((steal[k] or {}).get("steal_pct") or 0) >= 10
-        or ((steal[k] or {}).get("memcpy_gbps") or 99) < 11.0
-        for k in ("before", "after")
-    )
     if regressions:
         print(f"FAIL: {len(regressions)} regressions (details {out_path})"
-              + (" — host contended (steal >= 10% or memory bus < 11 GB/s), "
-                 "reading is substrate-attributed; re-run when "
-                 "bench/steal_probe.py says quiet" if noisy else ""))
+              + _HOST_NOTE.get(host_state(steal), ""))
         return 1
     print("OK: no regressions")
     return 0

@@ -379,3 +379,45 @@ def test_tier_block_store_roundtrip_and_pruning(spark, src_mat):
     exp2 = mat.read_tier(spark, "1h").select(*cols)
     got2 = mat.read_tier_compressed(spark, "1h")
     assert got2.exceptAll(exp2).count() == 0 and exp2.exceptAll(got2).count() == 0
+
+
+def test_repeated_realtime_read_compiles_no_new_classes(spark, src_mat):
+    """The generated-code cache (session.get_spark) holds a real-time
+    read's classes, so repeating the identical read compiles nothing."""
+    src, mat = src_mat
+    src.append(_turns(spark, ["a", "b"], n=30, gap=45))
+    mat.refresh(spark)
+    src.append(_turns(spark, ["a"], n=30, gap=45, idx0=30))  # un-refreshed tail
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    lo, hi = 1_600_000_000 - 3600, 1_600_000_000 + 86400
+
+    first = _norm(mat.read_realtime(spark, "1h", lo, hi)).collect()
+    # other queries in between, each with a new literal (inlined into the
+    # generated code, so a new class): more classes than Spark's default
+    # cache of 100 entries would keep alongside the first read's
+    start = metrics.METRIC_COMPILATION_TIME().getCount()
+    for k in range(120):
+        spark.range(1).where(F.col("id") != k).collect()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - start > 100
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount()
+    again = _norm(mat.read_realtime(spark, "1h", lo, hi)).collect()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == compiled
+    assert sorted(again) == sorted(first) and first
+
+
+def test_tier_read_pushes_bucket_bounds_into_scan(spark, src_mat):
+    """Tier tables index an integer bucket column: read_tier(lo, hi)
+    compares it directly, so both bounds reach the parquet scan instead of
+    a cast(cast(bucket as timestamp) as bigint) residual filter."""
+    src, mat = src_mat
+    src.append(_turns(spark, ["a"], n=20))
+    mat.refresh(spark)
+    lo, hi = 1_600_000_000 - 3600, 1_600_000_000 + 86400
+    df = mat.read_tier(spark, "1h", lo, hi)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert f"GreaterThanOrEqual(bucket,{lo})" in plan, plan
+    assert f"LessThanOrEqual(bucket,{hi})" in plan, plan
+    got = sorted(r["bucket"] for r in df.collect())
+    assert got and lo <= got[0] and got[-1] <= hi
+    assert got == sorted(r["bucket"] for r in mat.read_tier(spark, "1h").collect()
+                         if lo <= r["bucket"] <= hi)

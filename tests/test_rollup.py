@@ -96,6 +96,68 @@ def test_reaggregate_equals_direct(spark, small_transcripts):
     assert direct == via_1m
 
 
+def _exact_rows(df):
+    """Rows in (conv_id, bucket) order with the dist maps as ordered entry
+    lists: equal only when every value and every map entry's position
+    match."""
+    return sorted(
+        df.selectExpr(
+            "conv_id", "tier", "bucket", "cnt", "cnt_lat", "vmin", "vmax", "vsum",
+            "vmean", "map_entries(role_dist) as rd", "map_entries(tool_dist) as td",
+        ).collect(),
+        key=lambda r: (r["conv_id"], r["bucket"]),
+    )
+
+
+@pytest.mark.parametrize("vocab", ["partial", "none"])
+def test_direct_rollup_equals_chain_bitforbit(spark, small_transcripts, vocab):
+    """Raw -> 1h and raw -> 1d in one aggregate (the real-time tail read)
+    equal the 1m -> 1h -> 1d reaggregation chain bit for bit: with a vocab
+    that misses a role and a tool (counts under ``__other__``), and with no
+    vocab at all (auto-detected pivot vs the collect_list map fold)."""
+    turns = R.with_latency(small_transcripts)
+    if vocab == "partial":
+        roles = sorted(r[0] for r in small_transcripts.select("role").distinct().collect())
+        tools = sorted(r[0] for r in small_transcripts.select("tool").distinct().collect()
+                       if r[0] is not None)
+        kw = {"role_vocab": roles[:-1], "tool_vocab": tools[:-1]}
+    else:
+        kw = {"role_vocab": None, "tool_vocab": None}
+    chain = R.rollup_raw_to_tier(turns, "1m", **kw)
+    for tier in ("1h", "1d"):
+        chain = R.reaggregate(chain, tier, **kw)
+        direct = _exact_rows(R.rollup_raw_to_tier(turns, tier, **kw))
+        assert direct == _exact_rows(chain), tier
+        others = [r for r in direct if any(e["key"] == "__other__" for e in r["rd"])]
+        assert bool(others) == (vocab == "partial"), tier
+
+
+def test_vocab_memo_is_per_vocab_and_per_gateway(spark, small_transcripts, monkeypatch):
+    """The pivot/map-assembly Column builders are memoized; two vocabs in
+    one process each get their own maps, and a different JVM gateway never
+    reuses another gateway's Columns."""
+    from pyspark import SparkContext
+
+    roles = sorted(r[0] for r in small_transcripts.select("role").distinct().collect())
+    turns = R.with_latency(small_transcripts)
+
+    def keys(vocab):
+        df = R.rollup_raw_to_tier(turns, "1h", role_vocab=vocab, tool_vocab=[])
+        return {k for r in df.select("role_dist").collect() for k in r[0]}
+
+    assert keys(roles[:1]) == {roles[0], "__other__"}
+    assert keys(roles) == set(roles)
+    assert keys(roles[:1]) == {roles[0], "__other__"}  # memo hit, same answer
+
+    assert R._assemble_map(roles, "_r") is R._assemble_map(list(roles), "_r")
+    assert R._assemble_map(roles, "_r") is not R._assemble_map(roles[:1], "_r")
+    assert R._pivot_counts_raw("role", roles, "_r") is not R._pivot_counts_raw(
+        "role", roles, "_t")
+    before = R._pivot_counts_maps("role_dist", roles, "_r")
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert R._pivot_counts_maps("role_dist", roles, "_r") is not before
+
+
 def test_exact_kernel_matches_fast_path(spark, small_transcripts):
     turns = R.with_latency(small_transcripts)
     fast = _tier_rows(R.rollup_raw_to_tier(turns, "1h"))

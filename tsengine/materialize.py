@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsengine.operators import rollup as R
+from tsengine.session import shuffle_parallelism
 from tsengine.sources.snapshots import SnapshotTable
 
 _SRC_PROP = "source_to_id"
@@ -96,7 +97,7 @@ def _ranged(df: DataFrame, n: int | None = None) -> DataFrame:
       of small incremental refreshes).  A single file trivially holds only
       whole days, so the day-wholeness contract is preserved."""
     if n is None:
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n = shuffle_parallelism(df.sparkSession)
     n = max(1, min(int(n), 1024))
     if n == 1:
         return df.repartition(1)
@@ -233,8 +234,10 @@ class MaterializedTiers:
         if self.convstate.current_snapshot_id() is None:
             return R.with_latency(inc).withColumn("_anchor", F.lit(False))
         state = self.convstate.read(spark)
+        # semi join: one anchor per state row whose conv_id appears in the
+        # increment, with no distinct aggregate (and its job) over the keys
         anchors = (
-            state.join(inc.select("conv_id").distinct(), "conv_id")
+            state.join(inc, "conv_id", "left_semi")
             .select(
                 "conv_id",
                 F.col("last_turn_idx").alias("turn_idx"),
@@ -589,6 +592,13 @@ class MaterializedTiers:
         tier and the tail) is folded by :func:`rollup.merge_tier`'s
         decomposable-aggregate merge.
 
+        The tail is rolled from raw turns straight to ``tier`` in one
+        aggregate rather than down the 1m -> 1h -> 1d chain refresh()
+        uses: buckets nest (floor of a floor is the coarser floor) and
+        every column is decomposable over integer latencies, so the direct
+        rollup equals the chained one bit for bit, and the read plans one
+        aggregate and one exchange fewer per skipped tier.
+
         Read-only: tier tables, conv state and positions are untouched.
         Requires conv state to be at the tier's source position (true after
         any completed refresh; a kill mid-refresh leaves mixed positions —
@@ -609,13 +619,9 @@ class MaterializedTiers:
             )
         lat = self._increment_with_latency(spark, pos, head)
         inc = R.rollup_raw_to_tier(
-            lat.filter(~F.col("_anchor")), "1m",
+            lat.filter(~F.col("_anchor")), tier,
             role_vocab=self.role_vocab, tool_vocab=self.tool_vocab,
         )
-        for t in R.TIER_ORDER[1:R.TIER_ORDER.index(tier) + 1]:
-            inc = R.reaggregate(
-                inc, t, role_vocab=self.role_vocab, tool_vocab=self.tool_vocab
-            )
         # mirror read_tier's inclusive bucket bounds on the tail
         if lo is not None:
             inc = inc.filter(F.col("bucket") >= int(lo))

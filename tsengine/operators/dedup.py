@@ -547,6 +547,7 @@ def _semantic_pairs(
     wide.  At cluster scale the scan is already >= that wide and no extra
     exchange is ever added to the big path."""
     from tsengine.operators.similarity import _dot, _norm, ivf_assign
+    from tsengine.session import shuffle_parallelism
 
     a = ivf_assign(emb, centroids, vec_col, id_col).select(
         F.col("vec_id").alias("vid"),
@@ -554,7 +555,7 @@ def _semantic_pairs(
         "ivf_cell",
         _norm(F.col(vec_col)).alias("nrm"),
     )
-    n_shuffle = int(emb.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_shuffle = shuffle_parallelism(emb.sparkSession)
     if a.rdd.getNumPartitions() < n_shuffle:
         a = a.repartition(n_shuffle)
     x, y = a.alias("x"), a.alias("y")

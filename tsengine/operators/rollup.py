@@ -17,6 +17,8 @@ non-integer value planes where partition order would change float rounding.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -30,9 +32,8 @@ def with_latency(transcripts: DataFrame) -> DataFrame:
     input_hint invariant).  First turn has NULL latency."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     epoch = F.col("ts").cast("timestamp").cast("long")
-    return (
-        transcripts.withColumn("epoch", epoch)
-        .withColumn("value", (epoch - F.lag(epoch).over(w)).cast("double"))
+    return transcripts.withColumns(
+        {"epoch": epoch, "value": (epoch - F.lag(epoch).over(w)).cast("double")}
     )
 
 
@@ -60,35 +61,74 @@ def _count_map(list_col: str):
     )
 
 
-def _pivot_counts_raw(col: str, vocab: list, prefix: str) -> list:
+def _tier_frame(agg: DataFrame, tier, bucket: str, role_dist, tool_dist) -> DataFrame:
+    """The tier schema over an aggregate's output in ONE projection: each
+    ``withColumn`` re-analyzes the whole plan in the JVM, a fixed cost a
+    small read would otherwise pay once per derived column.  ``tier`` is a
+    Column (a literal for a fresh rollup, the group key for a merge)."""
+    return agg.select(
+        "conv_id", tier.alias("tier"), F.col(bucket).alias("bucket"),
+        "cnt", "cnt_lat", "vmin", "vmax", "vsum",
+        (F.col("vsum") / F.nullif(F.col("cnt_lat"), F.lit(0))).alias("vmean"),
+        role_dist.alias("role_dist"), tool_dist.alias("tool_dist"),
+    )
+
+
+def _memo_columns(build):
+    """Memoize a Column-list builder per ``(args, JVM gateway)``.
+
+    Each vocab pivot below costs dozens of py4j round trips, and every
+    rollup and reaggregate in a plan needs two of them plus two map
+    assemblies.  Columns are immutable expression trees, so one build per
+    ``(col, vocab, prefix)`` can be shared by every plan; list arguments
+    (vocabularies) are keyed as tuples.  The gateway is part of the key so
+    a restarted JVM never receives handles from the previous one."""
+    cached = functools.lru_cache(maxsize=64)(lambda gateway, *args: build(*args))
+
+    @functools.wraps(build)
+    def memoized(*args):
+        from pyspark import SparkContext
+
+        return cached(
+            SparkContext._gateway,
+            *(tuple(a) if isinstance(a, list) else a for a in args),
+        )
+
+    return memoized
+
+
+@_memo_columns
+def _pivot_counts_raw(col: str, vocab: tuple, prefix: str) -> tuple:
     """Per-vocab-entry codegen count columns over a raw categorical column,
     plus a total non-null count used to detect values outside the vocab."""
-    return [
+    return tuple(
         F.sum(F.when(F.col(col) == F.lit(v), 1).otherwise(0)).alias(f"{prefix}{i}")
         for i, v in enumerate(vocab)
-    ] + [F.count(col).alias(f"{prefix}tot")]
+    ) + (F.count(col).alias(f"{prefix}tot"),)
 
 
-def _pivot_counts_maps(col: str, vocab: list, prefix: str) -> list:
+@_memo_columns
+def _pivot_counts_maps(col: str, vocab: tuple, prefix: str) -> tuple:
     """Per-vocab-entry sums over finer-tier count maps, plus the total of
     ALL map values (so out-of-vocab keys in the finer maps are counted)."""
-    return [
+    return tuple(
         F.sum(F.coalesce(F.element_at(F.col(col), F.lit(v)), F.lit(0))).alias(
             f"{prefix}{i}"
         )
         for i, v in enumerate(vocab)
-    ] + [
+    ) + (
         F.sum(
             F.aggregate(
                 F.map_values(F.col(col)),
                 F.lit(0).cast("long"),
                 lambda acc, x: acc + x,
             )
-        ).alias(f"{prefix}tot")
-    ]
+        ).alias(f"{prefix}tot"),
+    )
 
 
-def _assemble_map(vocab: list, prefix: str):
+@_memo_columns
+def _assemble_map(vocab: tuple, prefix: str):
     """Rebuild map<string,long> from the pivoted count columns — pure Column
     API (map_from_entries over struct literals), NOT interpolated SQL text:
     vocab values are data-derived, and a value containing a quote/backslash
@@ -158,8 +198,10 @@ def rollup_raw_to_tier(
     slower and scales worse (object churn).  The vocabulary comes from the
     caller, or from a cheap dictionary-only distinct pre-scan
     (``auto_vocab``); above 256 distinct values it falls back to the
-    generic collect_list + fold path.  Coarser tiers never re-read raw:
-    see :func:`reaggregate`.
+    generic collect_list + fold path.  Materialized coarser tiers never
+    re-read raw (see :func:`reaggregate`); a coarser ``tier`` here is for
+    raw slices read once, such as a real-time read's un-refreshed tail,
+    and equals the reaggregation chain bit for bit.
     """
     width = TIERS[tier]
     b = turns.withColumn(
@@ -188,21 +230,10 @@ def rollup_raw_to_tier(
     else:
         aggs.append(F.collect_list("tool").alias("_tools"))
 
-    out = b.groupBy("conv_id", "bucket").agg(*aggs)
-    out = out.withColumn(
-        "role_dist",
+    return _tier_frame(
+        b.groupBy("conv_id", "bucket").agg(*aggs), F.lit(tier), "bucket",
         _assemble_map(role_vocab, "_r") if role_vocab is not None else _count_map("_roles"),
-    ).withColumn(
-        "tool_dist",
         _assemble_map(tool_vocab, "_t") if tool_vocab is not None else _count_map("_tools"),
-    )
-    out = (
-        out.withColumn("vmean", F.col("vsum") / F.nullif(F.col("cnt_lat"), F.lit(0)))
-        .withColumn("tier", F.lit(tier))
-    )
-    return out.select(
-        "conv_id", "tier", "bucket", "cnt", "cnt_lat", "vmin", "vmax", "vsum",
-        "vmean", "role_dist", "tool_dist",
     )
 
 
@@ -252,26 +283,10 @@ def reaggregate(
     else:
         aggs.append(F.collect_list("tool_dist").alias("_tool_maps"))
 
-    out = b.groupBy("conv_id", "bucket2").agg(*aggs)
-    out = out.withColumn(
-        "role_dist",
-        _assemble_map(role_vocab, "_r")
-        if role_vocab is not None
-        else _merge_maps("_role_maps"),
-    ).withColumn(
-        "tool_dist",
-        _assemble_map(tool_vocab, "_t")
-        if tool_vocab is not None
-        else _merge_maps("_tool_maps"),
-    )
-    out = (
-        out.withColumn("vmean", F.col("vsum") / F.nullif(F.col("cnt_lat"), F.lit(0)))
-        .withColumn("tier", F.lit(tier))
-        .withColumnRenamed("bucket2", "bucket")
-    )
-    return out.select(
-        "conv_id", "tier", "bucket", "cnt", "cnt_lat", "vmin", "vmax", "vsum",
-        "vmean", "role_dist", "tool_dist",
+    return _tier_frame(
+        b.groupBy("conv_id", "bucket2").agg(*aggs), F.lit(tier), "bucket2",
+        _assemble_map(role_vocab, "_r") if role_vocab is not None else _merge_maps("_role_maps"),
+        _assemble_map(tool_vocab, "_t") if tool_vocab is not None else _merge_maps("_tool_maps"),
     )
 
 
@@ -338,24 +353,18 @@ def merge_tier(*tiers: DataFrame) -> DataFrame:
     u = tiers[0]
     for t in tiers[1:]:
         u = u.unionByName(t)
-    out = (
-        u.groupBy("conv_id", "tier", "bucket")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("cnt_lat").alias("cnt_lat"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.sum("vsum").alias("vsum"),
-            F.collect_list("role_dist").alias("_role_maps"),
-            F.collect_list("tool_dist").alias("_tool_maps"),
-        )
-        .withColumn("role_dist", _merge_maps("_role_maps"))
-        .withColumn("tool_dist", _merge_maps("_tool_maps"))
-        .withColumn("vmean", F.col("vsum") / F.nullif(F.col("cnt_lat"), F.lit(0)))
+    agg = u.groupBy("conv_id", "tier", "bucket").agg(
+        F.sum("cnt").alias("cnt"),
+        F.sum("cnt_lat").alias("cnt_lat"),
+        F.min("vmin").alias("vmin"),
+        F.max("vmax").alias("vmax"),
+        F.sum("vsum").alias("vsum"),
+        F.collect_list("role_dist").alias("_role_maps"),
+        F.collect_list("tool_dist").alias("_tool_maps"),
     )
-    return out.select(
-        "conv_id", "tier", "bucket", "cnt", "cnt_lat", "vmin", "vmax", "vsum",
-        "vmean", "role_dist", "tool_dist",
+    return _tier_frame(
+        agg, F.col("tier"), "bucket",
+        _merge_maps("_role_maps"), _merge_maps("_tool_maps"),
     )
 
 

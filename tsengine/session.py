@@ -24,6 +24,8 @@ def get_spark(
     """Build (or reuse) a SparkSession tuned for this engine.
 
     - AQE on (runtime re-planning, skew-join handling at scale).
+    - generated-code cache sized for the engine's working set of classes,
+      so repeated reads reuse compiled code instead of recompiling it.
     - session timezone pinned to UTC so ``unix_timestamp``/casts are
       deterministic; calendar bucketing applies Europe/Madrid explicitly
       (reference analysis_utils.py:182-237).
@@ -67,6 +69,13 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # generated-class cache: Spark's default of 100 entries is smaller
+        # than the ~300 distinct classes one session of mixed tier reads
+        # (range, resample, Gorilla decode, real-time merge, formula)
+        # generates, so the LRU evicts classes the next read needs and each
+        # real-time read recompiles ~40 of them in Janino (~0.5 s).  Static
+        # conf: it only takes effect when this call creates the session.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
@@ -78,6 +87,16 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def shuffle_parallelism(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as an int.  Some platforms set it to
+    a non-numeric value (``"auto"``, adaptive auto-optimized shuffle); use
+    the context's default parallelism there."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
 
 
 def release_persistent_rdds(spark) -> int:

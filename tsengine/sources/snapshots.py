@@ -50,7 +50,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegralType, StructType
 
 
 class CommitConflict(RuntimeError):
@@ -462,9 +462,15 @@ class SnapshotTable:
         man = self.snapshot(sid)
         df = self._read_files(spark, self._plan_files(man, lo, hi, where),
                               man["schema"])
-        # double cast: TIMESTAMP_NTZ has no direct long cast (long/timestamp
-        # columns pass through the first cast unchanged)
-        ep = F.col(self.ts_col).cast("timestamp").cast("long") if self.ts_col else None
+        ep = None
+        if self.ts_col:
+            ep = F.col(self.ts_col)
+            ts_type = StructType.fromJson(json.loads(man["schema"]))[self.ts_col].dataType
+            # integer epochs (tier buckets) compare directly, so the bounds
+            # push down into the parquet scan; timestamps need the double
+            # cast (TIMESTAMP_NTZ has no direct long cast)
+            if not isinstance(ts_type, IntegralType):
+                ep = ep.cast("timestamp").cast("long")
         if self.ts_col and lo is not None:
             df = df.filter(ep >= int(lo))
         if self.ts_col and hi is not None:
